@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** The one package-private hook the benchmark needs: wait until every
+  * listener event posted so far has been delivered, so span counters
+  * are complete before they are read. */
+object BenchShim {
+  def drainListeners(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+}
